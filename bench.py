@@ -48,7 +48,8 @@ HEADLINE = [
     "dedup_simhash",
     "dedup_clusters",       # connected components over candidate pairs
     "dedup_embedding_cosine",  # cell-blocked near-dup pairs (materializes
-                               # the shared pair table _NEAR_PAIR_CACHE)
+                               # the shared pair table, memoized by
+                               # similarity._near_dup_pairs_cached)
     "dedup_semantic",       # SemDeDup survivor selection over the SAME
                             # pair table (production shape: pairs built
                             # once, consumed by both emitters)
@@ -155,7 +156,7 @@ BENCH_SKEW_TURNS = int(os.environ.get("SPARK_GRAFT_BENCH_SKEW", "8000"))
 
 def main() -> None:
     from pdf_extractor_spark.job.session import get_spark
-    from pdf_extractor_spark.queries import QUERIES
+    from pdf_extractor_spark.queries import get
 
     spark = get_spark(app_name="bench", cores=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
@@ -163,37 +164,16 @@ def main() -> None:
     sf = float(os.path.basename(SF_DIR.rstrip("/")).replace("sf", "") or 0.1)
     timings: dict[str, float] = {}
 
-    # the registry entries for the sf0.01-pinned-oracle queries ignore
-    # sf_dir by design (they self-pin to their oracle input); the bench
-    # must keep measuring the REAL $SPARK_GRAFT_SF_DIR, so it drives the
-    # sf-honoring impls directly for those names
-    from pdf_extractor_spark.queries.similarity import (
-        _ann_ivf,
-        _dedup_embedding_cosine,
-        _dedup_semantic,
-    )
-    from pdf_extractor_spark.queries.textops import (
-        _bpe_encode,
-        _pack_sequences,
-    )
-
-    impl_overrides = {
-        "ann_ivf": _ann_ivf,
-        "dedup_embedding_cosine": _dedup_embedding_cosine,
-        "dedup_semantic": _dedup_semantic,
-        "bpe_encode": _bpe_encode,
-        "pack_sequences": _pack_sequences,
-    }
-
     # untimed session warm-up (codegen, scan readers, broadcast machinery):
     # steady-state per-query walls, not first-query JVM init
-    QUERIES[HEADLINE[0]](spark, SF_DIR).write.mode("overwrite") \
+    get(HEADLINE[0]).impl(spark, SF_DIR).write.mode("overwrite") \
         .format("noop").save()
 
     for name in HEADLINE:
-        fn = impl_overrides.get(name) or QUERIES[name]
         t0 = time.time()
-        df = fn(spark, SF_DIR)
+        # the sf-honouring impl: a pinned query's registry fn reads its
+        # pin, but the bench measures the real $SPARK_GRAFT_SF_DIR
+        df = get(name).impl(spark, SF_DIR)
         # force full materialization of every column (count() would let
         # Catalyst prune the computed columns away)
         df.write.mode("overwrite").format("noop").save()

@@ -86,13 +86,6 @@ def _dot(a: list[float], b: list[float]) -> float:
     return acc
 
 
-def _cosine(a: list[float], b: list[float]) -> float:
-    # math.sqrt, NOT **0.5: IEEE sqrt is correctly rounded by contract,
-    # pow(x, 0.5) is not — the cross-implementation bit-equality spec
-    # requires both sides to use sqrt.
-    return _dot(a, b) / (math.sqrt(_dot(a, a)) * math.sqrt(_dot(b, b)))
-
-
 def select_sample(ids_vecs: list[tuple[int, list[float]]],
                   n_sample: int = N_FIT_SAMPLE
                   ) -> list[tuple[int, list[float]]]:

@@ -83,10 +83,6 @@ def _cells_dir(index_dir: str) -> str:
     return os.path.join(_gen_root(index_dir), "cells")
 
 
-def _centroids_dir(index_dir: str) -> str:
-    return os.path.join(_gen_root(index_dir), "centroids")
-
-
 def _cells_reader_at(spark: SparkSession, root: str):
     """Reader for a generation root's cell layout with the PERSISTED
     schema: a zero-row corpus writes only ``_SUCCESS`` under cells/, and

@@ -41,11 +41,11 @@ from pyspark.sql import functions as F
 
 from pdf_extractor_spark.queries.base import (
     Q,
-    evict_stale_session_entries,
     free_checkpoint,
     load,
     rhu,
     rhu_sql,
+    session_memo,
 )
 
 _N_MINHASH = 8      # K signatures
@@ -114,18 +114,11 @@ _CORPUS_SQL = rf"""
 # the "materialize the fingerprint table once" shape a 100 TB pipeline
 # uses, and the fix for the round-2 regression where both queries paid
 # the full corpus-derivation + md5 scan separately (BENCH.md).
-_FP_CACHE: dict = {}
-
-
+@session_memo
 def _fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    evict_stale_session_entries(_FP_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _FP_CACHE:
-        fp = _corpus(spark, sf_dir).select(
-            "doc_id", F.md5("text").alias("fingerprint")
-        )
-        _FP_CACHE[key] = fp.localCheckpoint(eager=False)
-    return _FP_CACHE[key]
+    return _corpus(spark, sf_dir).select(
+        "doc_id", F.md5("text").alias("fingerprint")
+    ).localCheckpoint(eager=False)
 
 
 def _dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -251,8 +244,8 @@ def _minhash_pairs(c: DataFrame, fp: DataFrame | None = None) -> DataFrame:
     then grow with the number of *distinct* near-dup docs, not copies.
 
     ``fp`` lets the caller pass an already-materialized fingerprint
-    table (the _FP_CACHE shared with dedup_exact) so one md5 scan serves
-    both queries.
+    table (the _fingerprints memo shared with dedup_exact) so one md5
+    scan serves both queries.
     """
     if fp is None:
         fp = c.select("doc_id", F.md5("text").alias("fingerprint"))
@@ -298,21 +291,16 @@ def _minhash_pairs(c: DataFrame, fp: DataFrame | None = None) -> DataFrame:
     return exact_pairs.unionByName(pairs)
 
 
-# Like _FP_CACHE: the candidate-pair table feeds BOTH dedup_minhash_lsh
-# and dedup_clusters in one driver session — materialize it once (the
-# "persist the pair table, then cluster it" shape of a production dedup
-# run) instead of re-paying shingle/signature/band generation.
-_PAIR_CACHE: dict = {}
-
-
+# Like _fingerprints: the candidate-pair table feeds BOTH
+# dedup_minhash_lsh and dedup_clusters in one driver session —
+# materialize it once (the "persist the pair table, then cluster it"
+# shape of a production dedup run) instead of re-paying
+# shingle/signature/band generation.
+@session_memo
 def _minhash_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    evict_stale_session_entries(_PAIR_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PAIR_CACHE:
-        _PAIR_CACHE[key] = _minhash_pairs(
-            _corpus(spark, sf_dir), _fingerprints(spark, sf_dir)
-        ).localCheckpoint(eager=False)
-    return _PAIR_CACHE[key]
+    return _minhash_pairs(
+        _corpus(spark, sf_dir), _fingerprints(spark, sf_dir)
+    ).localCheckpoint(eager=False)
 
 
 def _dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,11 +554,6 @@ _CC_MAX_ITERS = 64
 last_cc_rounds = 0
 
 
-# localCheckpoint release lives in base.free_checkpoint (shared with the
-# session caches); the historical module-local name is kept for callers.
-_free_checkpoint = free_checkpoint
-
-
 def cc_labels(edges: DataFrame) -> DataFrame:
     """Connected components over an undirected edge list → (doc_id, label)
     with label = min doc_id reachable (the canonical representative).
@@ -657,14 +640,14 @@ def cc_labels(edges: DataFrame) -> DataFrame:
             n_changed = (
                 upd.filter(F.col("new_label") != F.col("label")).count()
             )
-            _free_checkpoint(prev_ck)
+            free_checkpoint(prev_ck)
             prev_ck = upd
             labels = upd.select("doc_id", F.col("new_label").alias("label"))
             if n_changed == 0:
                 # sym is no longer needed once converged; the final round's
                 # checkpoint (labels' parent) stays live for the caller
                 last_cc_rounds = rounds
-                _free_checkpoint(sym)
+                free_checkpoint(sym)
                 return labels
         raise RuntimeError(
             f"connected components did not converge in {_CC_MAX_ITERS} "
@@ -673,8 +656,8 @@ def cc_labels(edges: DataFrame) -> DataFrame:
     except Exception:
         # error path (incl. the non-convergence guard): release the live
         # checkpoints instead of leaking them for the application lifetime
-        _free_checkpoint(sym)
-        _free_checkpoint(prev_ck)
+        free_checkpoint(sym)
+        free_checkpoint(prev_ck)
         raise
 
 

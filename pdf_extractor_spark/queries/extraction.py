@@ -41,8 +41,8 @@ from pdf_extractor_spark.gen.transcripts import generate_transcripts
 from pdf_extractor_spark.job.extract import run_extract
 from pdf_extractor_spark.queries.base import (
     Q,
-    evict_stale_session_entries,
     load,
+    session_memo,
     xor_checksum,
 )
 
@@ -93,7 +93,15 @@ def _extract_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the resumable-sink output dir per Spark app: the sink run is the
 # expensive part (stage + 4 batch jobs); every audit_consistency call in
 # a session reads the same committed output
-_SINK_CACHE: dict = {}
+@session_memo
+def _sink_output(spark: SparkSession) -> str:
+    import tempfile
+
+    from pdf_extractor_spark.job import sink
+
+    out = tempfile.mkdtemp(prefix="audit_consistency_")
+    sink.run_resumable(spark, transcripts_df(spark), out)
+    return out
 
 
 def _audit_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,15 +119,7 @@ def _audit_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage table."""
     from pdf_extractor_spark.job import sink
 
-    evict_stale_session_entries(_SINK_CACHE, spark)
-    key = spark.sparkContext.applicationId
-    if key not in _SINK_CACHE:
-        import tempfile
-
-        out = tempfile.mkdtemp(prefix="audit_consistency_")
-        sink.run_resumable(spark, transcripts_df(spark), out)
-        _SINK_CACHE[key] = out
-    out = _SINK_CACHE[key]
+    out = _sink_output(spark)
     audit = sink.read_audit(spark, out).select(
         F.col("bucket").cast("int").alias("bucket"),
         F.col("batch").cast("int").alias("batch"),

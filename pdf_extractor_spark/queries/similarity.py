@@ -44,17 +44,18 @@ from pyspark.sql import functions as F
 from pdf_extractor_spark.core import kmeans
 from pdf_extractor_spark.core import pq as pqspec
 from pdf_extractor_spark.queries.base import (
+    PINNED_SF,
     Q,
-    evict_stale_session_entries,
+    fit_sample,
     load,
     rhu,
     rhu_sql,
+    session_memo,
 )
 
 _N_QUERIES = 5
 _TOP_K = 5
 _N_PROBE = 2
-_PINNED_SF = "/root/testdata/sf0.01"
 
 
 def _dvec(col) -> Column:
@@ -142,43 +143,33 @@ SELECT q_id, rank, n_id, score FROM (
 """
 
 
-# fitted centroids per (Spark app, sf_dir) — the fit is deterministic, so
-# caching only saves the repeated sample scan + driver fit within a session
-_FIT_CACHE: dict[tuple[str, str], list[list[float]]] = {}
+def _vec_sample(vecs: DataFrame, n: int) -> list[tuple[int, list[float]]]:
+    """The fit sample of an (vec_id, embedding) corpus as (id, floats)
+    pairs, hash-ordered (the fit specs' sample order)."""
+    rows = fit_sample(vecs.select("vec_id", "embedding"), "vec_id", n)
+    return [(r.vec_id, [float(x) for x in r.embedding]) for r in rows]
 
 
-def _fitted_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+def _kmeans_fit(corpus: DataFrame) -> list[list[float]]:
     """Corpus-scaled coarse-quantizer centroids: K = max(16, ceil(n/128))
-    from a metadata-only count() probe, hash-bounded 16·K-row sample
-    pulled to the driver, deterministic Lloyd fit (core/kmeans.py spec
-    step 0); consumed as literal arrays by the narrow assignment
-    expressions.  Scaling K with the corpus (fixed ~128-vector target
-    cell size) is what keeps every consumer's within-cell work bounded
-    as the corpus grows; the floor keeps sf≤0.1 inputs on the historical
+    from a count() probe, a 16·K-row hash-bounded sample pulled to the
+    driver, deterministic Lloyd fit (core/kmeans.py spec step 0);
+    consumed as literal arrays by the narrow assignment expressions.
+    Scaling K with the corpus (fixed ~128-vector target cell size) is
+    what keeps every consumer's within-cell work bounded as the corpus
+    grows; the floor keeps sf≤0.1 inputs on the historical
     K=16/256-sample fit, so the pinned mirror oracles are unchanged.
-    ``orderBy(md5(id), id).limit(n)`` is a TakeOrdered — O(n) per
-    partition and collects exactly n rows at ANY corpus size, so the
-    driver never holds more than n_sample×dim floats."""
-    evict_stale_session_entries(_FIT_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _FIT_CACHE:
-        e = load(spark, sf_dir, "embeddings")
-        k = kmeans.n_centroids(e.count())
-        sample = (
-            e.select(
-                "vec_id", "embedding",
-                F.md5(F.col("vec_id").cast("string")).alias("hk"),
-            )
-            .orderBy("hk", "vec_id")
-            .limit(kmeans.n_fit_sample(k))
-            .collect()
-        )
-        # rows arrive hash-ordered (the fit spec's sample order)
-        _FIT_CACHE[key] = kmeans.fit(
-            [(r.vec_id, [float(x) for x in r.embedding]) for r in sample],
-            k=k,
-        )
-    return _FIT_CACHE[key]
+    The sample is a TakeOrdered (base.fit_sample), so the driver never
+    holds more than n_sample×dim floats."""
+    k = kmeans.n_centroids(corpus.count())
+    return kmeans.fit(_vec_sample(corpus, kmeans.n_fit_sample(k)), k=k)
+
+
+@session_memo
+def _fitted_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+    """The quantizer fitted on the embeddings table (a metadata-only
+    count probe)."""
+    return _kmeans_fit(load(spark, sf_dir, "embeddings"))
 
 
 def _sql_double_lit(x: float) -> str:
@@ -367,34 +358,12 @@ def _expanded_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-_SCALED_FIT_CACHE: dict = {}
-
-
+@session_memo
 def _scaled_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    """The same spec as ``_fitted_centroids`` driven ABOVE the K floor:
-    count probe on the derived corpus (a narrow scan of the base table —
-    at scale the count is base_count × 5, known without a scan), K from
-    the corpus-scaled rule, 16·K-row hash-bounded TakeOrdered sample,
-    deterministic driver Lloyd fit."""
-    evict_stale_session_entries(_SCALED_FIT_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SCALED_FIT_CACHE:
-        corpus = _expanded_corpus(spark, sf_dir)
-        k = kmeans.n_centroids(corpus.count())
-        sample = (
-            corpus.select(
-                "vec_id", "embedding",
-                F.md5(F.col("vec_id").cast("string")).alias("hk"),
-            )
-            .orderBy("hk", "vec_id")
-            .limit(kmeans.n_fit_sample(k))
-            .collect()
-        )
-        _SCALED_FIT_CACHE[key] = kmeans.fit(
-            [(r.vec_id, [float(x) for x in r.embedding]) for r in sample],
-            k=k,
-        )
-    return _SCALED_FIT_CACHE[key]
+    """The same fit driven ABOVE the K floor: count probe on the derived
+    corpus (a narrow scan of the base table — at scale the count is
+    base_count × 5, known without a scan)."""
+    return _kmeans_fit(_expanded_corpus(spark, sf_dir))
 
 
 def _ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -415,32 +384,16 @@ def _ann_ivf_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- IVF-PQ (compressed ANN)
 
-_PQ_FIT_CACHE: dict = {}
-
-
+@session_memo
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
     """Product-quantizer codebooks (core/pq.py spec): the same
     hash-ordered TakeOrdered sample rule as the coarse-quantizer fit —
     256 rows to the driver at ANY corpus size — then a deterministic
-    per-subspace Lloyd fit.  Cached per (app, sf_dir) like the centroid
-    fit; the codebooks land in the query plan as literal matrices."""
-    evict_stale_session_entries(_PQ_FIT_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQ_FIT_CACHE:
-        e = load(spark, sf_dir, "embeddings")
-        sample = (
-            e.select(
-                "vec_id", "embedding",
-                F.md5(F.col("vec_id").cast("string")).alias("hk"),
-            )
-            .orderBy("hk", "vec_id")
-            .limit(pqspec.N_PQ_SAMPLE)
-            .collect()
-        )
-        _PQ_FIT_CACHE[key] = pqspec.fit_codebooks(
-            [(r.vec_id, [float(x) for x in r.embedding]) for r in sample]
-        )
-    return _PQ_FIT_CACHE[key]
+    per-subspace Lloyd fit; the codebooks land in the query plan as
+    literal matrices."""
+    return pqspec.fit_codebooks(
+        _vec_sample(load(spark, sf_dir, "embeddings"), pqspec.N_PQ_SAMPLE)
+    )
 
 
 def _sq_l2_fold(a, b) -> Column:
@@ -767,18 +720,12 @@ def _near_dup_pairs(cells: DataFrame) -> DataFrame:
 # dedup_embedding_cosine and dedup_semantic both consume it (pair
 # emission vs survivor selection over the SAME pairs) — the first caller
 # materializes it once, the production "materialize the pair table, then
-# decide" shape (same rationale as dedup.py's _PAIR_CACHE)
-_NEAR_PAIR_CACHE: dict = {}
-
-
+# decide" shape (same rationale as dedup.py's _minhash_pairs_cached)
+@session_memo
 def _near_dup_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    evict_stale_session_entries(_NEAR_PAIR_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NEAR_PAIR_CACHE:
-        _NEAR_PAIR_CACHE[key] = _near_dup_pairs(
-            _jittered_cells(spark, sf_dir)
-        ).localCheckpoint(eager=False)
-    return _NEAR_PAIR_CACHE[key]
+    return _near_dup_pairs(
+        _jittered_cells(spark, sf_dir)
+    ).localCheckpoint(eager=False)
 
 
 def _dedup_cosine_sql() -> str:
@@ -799,7 +746,7 @@ WITH corpus AS (
   FROM embeddings WHERE vec_id % 10 = 0
 ),
 cents AS (
-  SELECT cell_id, c_emb FROM {centroid_sql_literals(_PINNED_SF + "/embeddings.parquet")}
+  SELECT cell_id, c_emb FROM {centroid_sql_literals(PINNED_SF + "/embeddings.parquet")}
 ),
 assigned AS (
   SELECT v.vec_id, v.embedding, c.cell_id,
@@ -898,7 +845,7 @@ WITH RECURSIVE corpus AS (
   FROM embeddings WHERE vec_id % 10 = 0
 ),
 cents AS (
-  SELECT cell_id, c_emb FROM {centroid_sql_literals(_PINNED_SF + "/embeddings.parquet")}
+  SELECT cell_id, c_emb FROM {centroid_sql_literals(PINNED_SF + "/embeddings.parquet")}
 ),
 assigned AS (
   SELECT v.vec_id, v.embedding, c.cell_id,
@@ -946,66 +893,49 @@ FROM members
 """
 
 
-def _self_pinned(fn):
-    """Registry wrapper for queries whose oracle content is generated
-    from the PINNED sf0.01 input (mirror-fit centroid literals, expected
-    parquet): the query reads the pin ITSELF instead of trusting the
-    harness dir to hold that exact dataset — at any other sf the two
-    sides would block on different quantizers and agree only by
-    coincidence, and a content drift of the harness's sf0.01 dir would
-    turn the gate red confusingly (round-3 ADVICE).  The sf-honoring
-    impls (``_ann_ivf`` etc.) stay importable for bench.py and the
-    index/job layer, which measure real scale dirs."""
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return fn(spark, _PINNED_SF)
-    return wrapped
-
-
 QUERIES: list[Q] = [
     # sf_pin: the oracle SQL embeds centroid literals from the mirror fit
-    # on the PINNED sf0.01 input, so the Spark side reads the pin itself
-    # (_self_pinned); Q.sf_pin additionally tells the rehearsal to
-    # register the oracle's DuckDB views from the pin.
-    Q("dedup_embedding_cosine", _self_pinned(_dedup_embedding_cosine),
+    # on the PINNED sf0.01 input
+    Q("dedup_embedding_cosine", _dedup_embedding_cosine,
       _dedup_cosine_sql,
       "embedding-cosine near-dup pairs, blocked by fitted IVF "
       "coarse-quantizer cell (pinned sf0.01 quantizer oracle)",
-      sf_pin=_PINNED_SF),
-    Q("dedup_semantic", _self_pinned(_dedup_semantic), _dedup_semantic_sql,
+      sf_pin=PINNED_SF),
+    Q("dedup_semantic", _dedup_semantic, _dedup_semantic_sql,
       "SemDeDup-style survivor selection: connected components over "
       "cell-blocked cosine near-dup pairs, keep the member farthest "
       "from its assigned centroid (pinned sf0.01 quantizer oracle)",
-      sf_pin=_PINNED_SF),
+      sf_pin=PINNED_SF),
     Q("cosine_topk", _cosine_topk, _COSINE_SQL,
       "brute-force cosine top-k (exact baseline)"),
-    Q("ann_ivf", _self_pinned(_ann_ivf),
+    Q("ann_ivf", _ann_ivf,
       "SELECT * FROM read_parquet('/root/repo/expected/ann_ivf.parquet')",
       "IVF ANN with fitted sampled-k-means quantizer (scale path); oracle "
       "is a checked-in independent sequential mirror at the pinned sf0.01",
-      sf_pin=_PINNED_SF),
-    Q("ann_ivf_scaled", _self_pinned(_ann_ivf_scaled),
+      sf_pin=PINNED_SF),
+    Q("ann_ivf_scaled", _ann_ivf_scaled,
       "SELECT * FROM read_parquet("
       "'/root/repo/expected/ann_ivf_scaled.parquet')",
       "IVF ANN with the quantizer K ABOVE the floor (K=20 from a "
       "5×-expanded exact-transform corpus) — drives the corpus-scaled "
       "fit path through the driver hash gate; oracle is the independent "
       "mirror expansion+fit+search at the pinned sf0.01",
-      sf_pin=_PINNED_SF),
-    Q("ann_ivf_pq", _self_pinned(_ann_ivf_pq),
+      sf_pin=PINNED_SF),
+    Q("ann_ivf_pq", _ann_ivf_pq,
       "SELECT * FROM read_parquet('/root/repo/expected/ann_ivf_pq.parquet')",
       "IVF-PQ compressed ANN (FAISS IVF,PQ8 shape): 8 one-byte codes per "
       "vector (32× smaller index), ADC lookup scoring inside probed "
       "cells; oracle is the independent mirror fit+encode+search at the "
       "pinned sf0.01",
-      sf_pin=_PINNED_SF),
-    Q("ann_ivf_pq_rerank", _self_pinned(_ann_ivf_pq_rerank),
+      sf_pin=PINNED_SF),
+    Q("ann_ivf_pq_rerank", _ann_ivf_pq_rerank,
       "SELECT * FROM read_parquet("
       "'/root/repo/expected/ann_ivf_pq_rerank.parquet')",
       "two-stage IVF-PQ search (FAISS refine pattern): ADC shortlist of "
       "20 per query, then exact rhu4-cosine re-rank over only those raw "
       "vectors (broadcast refine join, no corpus shuffle); oracle is the "
       "independent mirror two-stage search at the pinned sf0.01",
-      sf_pin=_PINNED_SF),
+      sf_pin=PINNED_SF),
     Q("embedding_stats", _embedding_stats, _EMB_STATS_SQL,
       "vector corpus norm/label profile"),
 ]

@@ -28,11 +28,13 @@ from pyspark.sql import functions as F
 
 from pdf_extractor_spark.core.normalize import UNICODE_TO_LATEX
 from pdf_extractor_spark.queries.base import (
+    PINNED_SF,
     Q,
-    evict_stale_session_entries,
+    fit_sample,
     load,
     rhu,
     rhu_sql,
+    session_memo,
     sql_escape,
 )
 
@@ -366,11 +368,10 @@ FROM m
 _BIN_FIT_SAMPLE = 256
 _BIN_PCTS = (0.25, 0.50, 0.75)
 
+
 # quartile thresholds per (Spark app, sf_dir) — the fit is deterministic,
-# caching only saves the repeated sample scan within a session
-_BIN_CACHE: dict[tuple[str, str], list[float]] = {}
-
-
+# memoizing only saves the repeated sample scan within a session
+@session_memo
 def _bin_thresholds(spark: SparkSession, sf_dir: str) -> list[float]:
     """Quartile thresholds of ``quality_score`` from a deterministic
     hash-bounded sample — the same fit pattern as the IVF quantizer
@@ -378,37 +379,25 @@ def _bin_thresholds(spark: SparkSession, sf_dir: str) -> list[float]:
 
     Exact global quantiles need a full sort (and ``ntile`` would pile
     the whole corpus onto ONE window task); at 100 TB both are
-    scale-killers for what is a 3-number estimate.  Instead:
-    ``orderBy(md5(id), id).limit(n)`` is a TakeOrdered — O(n) heap per
-    partition, exactly ``n`` rows ever reach the driver at ANY corpus
-    size — and the thresholds are exact percentile_disc quantiles OF THE
-    SAMPLE (1-based rank ``ceil(p·n)`` of the ascending scores).  The
-    oracle SQL re-derives the same sample and ranks independently, so
-    the fit spec itself is hash-gated."""
-    evict_stale_session_entries(_BIN_CACHE, spark)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BIN_CACHE:
-        import math
+    scale-killers for what is a 3-number estimate.  Instead the
+    TakeOrdered sample of ``base.fit_sample`` brings exactly ``n`` rows
+    to the driver at ANY corpus size, and the thresholds are exact
+    percentile_disc quantiles OF THE SAMPLE (1-based rank ``ceil(p·n)``
+    of the ascending scores).  The oracle SQL re-derives the same sample
+    and ranks independently, so the fit spec itself is hash-gated."""
+    import math
 
-        d = load(spark, sf_dir, "documents")
-        c = quality_cols()
-        rows = (
-            d.select(
-                c["quality_score"].alias("s"),
-                F.md5(F.col("doc_id").cast("string")).alias("hk"),
-                "doc_id",
-            )
-            .orderBy("hk", "doc_id")
-            .limit(_BIN_FIT_SAMPLE)
-            .collect()
-        )
-        scores = sorted(float(r.s) for r in rows)
-        n = len(scores)
-        _BIN_CACHE[key] = [
-            scores[max(0, math.ceil(p * n) - 1)] if n else 0.0
-            for p in _BIN_PCTS
-        ]
-    return _BIN_CACHE[key]
+    d = load(spark, sf_dir, "documents")
+    rows = fit_sample(
+        d.select(quality_cols()["quality_score"].alias("s"), "doc_id"),
+        "doc_id", _BIN_FIT_SAMPLE,
+    )
+    scores = sorted(float(r.s) for r in rows)
+    n = len(scores)
+    return [
+        scores[max(0, math.ceil(p * n) - 1)] if n else 0.0
+        for p in _BIN_PCTS
+    ]
 
 
 def _quality_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -501,7 +490,6 @@ FROM documents
 # (oracle_mirror/bpe.py via scripts/gen_expected.py), so the two
 # implementations gate each other.
 _BPE_SCHEMA = "doc_id bigint, n_tokens bigint, token_checksum string"
-_BPE_PINNED_SF = "/root/testdata/sf0.01"
 
 
 def _bpe_batches(merges: list[tuple[str, str]]):
@@ -1353,19 +1341,15 @@ QUERIES: list[Q] = [
       "pass — no global sort, no ntile window"),
     Q("token_count", _token_count, _TOKEN_COUNT_SQL,
       "whitespace + BPE-ish regex token counting"),
-    # sf_pin + self-pinned input: the oracle is expected parquet
-    # serialized by the mirror encoder over the PINNED sf0.01 documents,
-    # so the query reads that pin itself (the ann_ivf/_EXPECTED
-    # discipline); _bpe_encode stays importable for bench/jobs, which
-    # honor real sf dirs.
-    Q("bpe_encode",
-      lambda spark, _sf: _bpe_encode(spark, _BPE_PINNED_SF),
+    # sf_pin: the oracle is expected parquet serialized by the mirror
+    # encoder over the PINNED sf0.01 documents
+    Q("bpe_encode", _bpe_encode,
       "SELECT * FROM read_parquet('/root/repo/expected/bpe_encode"
       ".parquet')",
       "learned-merges BPE encode (checked-in 512-merge table, "
       "closure-broadcast, Arrow-batched, pretoken-memoized); oracle is "
       "the independent mirror encoder's checked-in output",
-      sf_pin=_BPE_PINNED_SF),
+      sf_pin=PINNED_SF),
     Q("curation_route", _curation_route, _CURATION_ROUTE_SQL,
       "curation decision routing: quality gate -> language gate -> "
       "first-survivor-wins exact dedup, gate-order reason attribution "
@@ -1380,16 +1364,12 @@ QUERIES: list[Q] = [
       "weighted source-mixture sampling: per-source rates, md5-keyed "
       "deterministic selection, single narrow pass"),
     # sf_pin: the oracle's per-doc token counts are the mirror encoder's
-    # checked-in sf0.01 parquet (the bpe_encode discipline), so the
-    # query reads that pin itself; _pack_sequences stays importable for
-    # bench/jobs, which honor real sf dirs.
-    Q("pack_sequences",
-      lambda spark, _sf: _pack_sequences(spark, _BPE_PINNED_SF),
-      _PACK_SQL,
+    # checked-in sf0.01 parquet (the bpe_encode discipline)
+    Q("pack_sequences", _pack_sequences, _PACK_SQL,
       "token-budget sequence packing: cumulative learned-merges BPE "
       "token windows per (source, md5-block) shard; oracle joins the "
       "mirror encoder's counts and restates the window in DuckDB",
-      sf_pin=_BPE_PINNED_SF),
+      sf_pin=PINNED_SF),
     Q("pii_redact", _pii_redact, _PII_SQL,
       "regex PII redaction (email/IPv4/phone) + match counts; pure "
       "JVM expression chain in the Java-regex ∩ RE2 common subset"),

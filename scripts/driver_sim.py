@@ -1,13 +1,13 @@
 #!/usr/bin/env python
 """Driver-simulation: what the harness does with __spark_entry__ at sf0.01."""
-import math, sys, time
-sys.path.insert(0, "/root/repo")
+import math, os, sys, time
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import __spark_entry__ as E
 from pyspark.sql import SparkSession
 
 SF = "/root/testdata/sf0.01"
-spark = (SparkSession.builder.master("local[32]")
+spark = (SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]")
          .config("spark.sql.shuffle.partitions", "32")
          .config("spark.sql.session.timeZone", "UTC")
          .config("spark.ui.enabled", "false")

@@ -280,13 +280,46 @@ def test_dup_passages_hand_corpus(spark, tmp_path):
     assert got[58] == (3, 0, 0.0)
 
 
-def test_evict_stale_session_entries(spark):
-    """Cache entries keyed by a stopped application's id must be dropped
-    at access time (the module caches otherwise accumulate stale frame
-    handles and pinned checkpoints across session restarts)."""
-    from pdf_extractor_spark.queries.base import evict_stale_session_entries
+def test_session_memo(spark):
+    """session_memo keys on (applicationId, *args after spark): a same-app
+    call hits for both key shapes in use, an entry from another
+    application is dropped at access time, and a dropped DataFrame has
+    its localCheckpoint freed (stale frame handles and pinned blocks
+    would otherwise accumulate across session restarts)."""
+    from types import SimpleNamespace
 
-    app = spark.sparkContext.applicationId
-    cache = {("app-from-a-stopped-session", "sf"): object(), (app, "sf"): 2}
-    evict_stale_session_entries(cache, spark)
-    assert cache == {(app, "sf"): 2}
+    from pdf_extractor_spark.queries.base import session_memo
+
+    calls = []
+
+    @session_memo
+    def per_session(s):
+        calls.append("session")
+        # a real checkpoint for the live app, a plain value for the
+        # stand-in application below
+        return spark.range(5).localCheckpoint(eager=True) \
+            if s is spark else "other"
+
+    @session_memo
+    def per_dir(s, sf_dir):
+        calls.append(sf_dir)
+        return len(calls)
+
+    def pinned(df) -> bool:
+        rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+        return spark.sparkContext._jsc.getPersistentRDDs().containsKey(rdd_id)
+
+    ck = per_session(spark)
+    assert per_session(spark) is ck and pinned(ck)
+    assert per_dir(spark, "a") == per_dir(spark, "a") == 2
+    assert per_dir(spark, "b") == 3
+    assert calls == ["session", "a", "b"]
+
+    stopped = "app-from-a-stopped-session"
+    other = SimpleNamespace(sparkContext=SimpleNamespace(applicationId=stopped))
+    assert per_session(other) == "other"
+    assert not pinned(ck)
+    assert per_dir(other, "a") == 5
+    # the live app's entries were dropped, so it recomputes
+    assert per_dir(spark, "a") == 6
+    assert calls == ["session", "a", "b", "session", "a", "a"]

@@ -188,8 +188,24 @@ def test_oracle_sql_membership_is_lazy():
     def boom() -> str:
         raise AssertionError("membership probe must not build SQL")
 
-    m = _LazyOracleSQL([Q(name="x", fn=lambda s, d: None, sql=boom)])
+    m = _LazyOracleSQL([Q(name="x", impl=lambda s, d: None, sql=boom)])
     assert "x" in m and "y" not in m
     assert m.get("y") is None
     with pytest.raises(AssertionError, match="must not build"):
         m["x"]
+
+
+def test_pinned_fn_reads_its_pin():
+    """``Q.fn`` is what the registry exposes: a pinned query passes its
+    pin whatever directory it is given, an unpinned one passes the
+    directory through, and ``Q.impl`` always honours the directory."""
+    from pdf_extractor_spark.queries.base import Q
+
+    def impl(spark, sf_dir):
+        return sf_dir
+
+    pinned = Q("p", impl, None, sf_pin="/pin")
+    unpinned = Q("u", impl, None)
+    assert pinned.fn(None, "/harness") == "/pin"
+    assert pinned.impl(None, "/harness") == "/harness"
+    assert unpinned.fn(None, "/harness") == "/harness"
